@@ -311,6 +311,31 @@ def _module_file_hash(dotted: str) -> str | None:
     return h
 
 
+# The line rule of ``ast.get_source_segment``: a line ends at "\r\n", "\r"
+# or "\n" and nothing else (``str.splitlines`` would also break on form
+# feeds and other separators the parser does not count).
+_LINE_RE = re.compile(r"[^\r\n]*(?:\r\n|\r|\n)|[^\r\n]+")
+
+
+def _split_source_lines(text: str) -> list[str]:
+    return _LINE_RE.findall(text)
+
+
+def _source_segment(lines: list[str], node) -> str:
+    """``ast.get_source_segment(text, node)`` for a parsed statement, over
+    lines already split with ``_split_source_lines``: ``get_source_segment``
+    re-splits the whole module on every call, quadratic over a module's
+    definitions. Column offsets are UTF-8 byte offsets, as in the AST."""
+    first, last = node.lineno - 1, node.end_lineno - 1
+    if first == last:
+        return lines[first].encode()[node.col_offset : node.end_col_offset].decode()
+    return (
+        lines[first].encode()[node.col_offset :].decode()
+        + "".join(lines[first + 1 : last])
+        + lines[last].encode()[: node.end_col_offset].decode()
+    )
+
+
 # module -> {"defs": {name: source_segment}, "imports": {local: (module, orig|None)}}
 _module_info_cache: dict[str, dict] = {}
 
@@ -324,16 +349,18 @@ def _module_info(module: str) -> dict:
     info = {"defs": {}, "imports": {}}
     path = os.path.join(_REPO_ROOT, *module.split(".")) + ".py"
     try:
-        text = open(path).read()
+        with open(path) as f:
+            text = f.read()
         tree = ast.parse(text)
     except (OSError, SyntaxError):
         _module_info_cache[module] = info
         return info
+    lines = _split_source_lines(text)
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            info["defs"][node.name] = ast.get_source_segment(text, node) or ""
+            info["defs"][node.name] = _source_segment(lines, node)
         elif isinstance(node, ast.Assign):
-            seg = ast.get_source_segment(text, node) or ""
+            seg = _source_segment(lines, node)
             for t in node.targets:
                 if isinstance(t, ast.Name):
                     info["defs"][t.id] = seg
@@ -386,17 +413,15 @@ def _symbol_hash(module: str, name: str | None, stack: frozenset = frozenset()) 
     return h
 
 
-def _fn_engine_deps(fn) -> list[tuple[str, str | None]]:
+def _fn_engine_deps(fn, src: str) -> list[tuple[str, str | None]]:
     """(module, symbol) pairs a query function references: function-local
-    ``from pkg.x import y`` statements (AST of the function source) plus
-    module-top imports of its defining module whose local name appears in
-    the function body."""
+    ``from pkg.x import y`` statements (AST of ``src``, the function's
+    source) plus module-top imports of its defining module whose local
+    name appears in the function body."""
     import ast
     import textwrap
 
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
+    if not src:
         return []
     deps: set[tuple[str, str | None]] = set()
     try:
@@ -436,7 +461,7 @@ def query_hash(name: str) -> str:
     except (OSError, TypeError):
         src = ""
     parts = [src, ORACLE.get(name, "")]
-    for module, symbol in _fn_engine_deps(fn):
+    for module, symbol in _fn_engine_deps(fn, src):
         parts.append(f"{module}:{symbol}={_symbol_hash(module, symbol)}")
     return hashlib.sha256("\x00".join(parts).encode()).hexdigest()
 

@@ -122,10 +122,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env var, default 32)
-    so the bench harness and tests share one sizing knob.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env var, default
+    ``os.cpu_count()``) so the bench harness and tests share one sizing knob.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
     )

@@ -607,7 +607,7 @@ def main() -> None:
         # head medians), so a later anomaly can be adjudicated per query
         # after the fact. Additions-only: the printed JSON line and
         # BENCH_AB.json are unchanged.
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
         with open(os.path.join(REPO, f"BENCH_AB_{cpus}c.json"), "w") as f:
             json.dump({**ab, "head_queries": timings}, f, indent=1)
         ab = {

@@ -10,7 +10,12 @@ never-checked (or red-checked) name waits outside it.
 
 from __future__ import annotations
 
+import ast
+import inspect
 import json
+import os
+
+import pytest
 
 from ab_inbev_big_data_case_spark import registry
 
@@ -176,16 +181,17 @@ def test_changed_since_checked_detects_live_edits():
     """The real registry: changed_since_checked() must flag exactly the
     names whose current query_hash differs from QUERY_HASHES.json — and
     the derived window must hold the HIGHEST-priority slice of the
-    never-checked + changed backlog. When that backlog exceeds the window
-    capacity (an optimization round editing shared helpers can re-flag
-    >50 symbol closures at once — r16 did), the overflow legitimately
-    spills to the next round; what must NEVER happen is an unchanged
-    green occupying a slot while a changed green waits outside."""
+    never-checked + changed backlog, where never-checked names outrank
+    changed greens (``_derive_order`` buckets 0 and 1). When that backlog
+    exceeds the window capacity (an optimization round editing shared
+    helpers can re-flag >50 symbol closures at once — r16 did), the
+    overflow legitimately spills to the next round: every never-checked
+    name is admitted first, and changed greens fill every slot left over.
+    What must NEVER happen is an unchanged green occupying a slot while a
+    changed green waits outside."""
     registry.load_all()
     rec = registry.recorded_hashes()
     if not rec:  # hash file not seeded in this checkout
-        import pytest
-
         pytest.skip("QUERY_HASHES.json absent")
     changed = registry.changed_since_checked()
     for n in changed:
@@ -209,6 +215,14 @@ def test_changed_since_checked_detects_live_edits():
             f"unchanged greens inside the window while changed/never-"
             f"checked names wait: {sorted(squatters)}"
         )
+        # ...and changed greens take every slot never-checked names leave.
+        admitted = window & changed_green
+        assert len(admitted) == min(
+            len(changed_green), len(window) - len(window & never_checked)
+        ), (
+            f"{len(admitted)} changed greens admitted to a window with "
+            f"{len(window & never_checked)} never-checked names"
+        )
 
 
 def test_query_hash_tracks_helper_symbol_content(monkeypatch):
@@ -220,7 +234,7 @@ def test_query_hash_tracks_helper_symbol_content(monkeypatch):
     registry.load_all()
     name = "semdedup_corpus"
     fn = getattr(registry.QUERIES[name], "__wrapped__")
-    deps = registry._fn_engine_deps(fn)
+    deps = registry._fn_engine_deps(fn, inspect.getsource(fn))
     key = ("ab_inbev_big_data_case_spark.llm.similarity", "semdedup_cells")
     assert key in [(m, s) for m, s in deps], deps
     h0 = registry.query_hash(name)
@@ -228,3 +242,86 @@ def test_query_hash_tracks_helper_symbol_content(monkeypatch):
     monkeypatch.setitem(registry._symbol_hash_cache, key, "0" * 64)
     h1 = registry.query_hash(name)
     assert h0 != h1
+
+
+def _engine_modules():
+    """(dotted module name, source text) of every package module."""
+    root = os.path.join(registry._REPO_ROOT, registry._PKG)
+    for dirpath, _, files in sorted(os.walk(root)):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                rel = os.path.relpath(os.path.join(dirpath, f[:-3]), registry._REPO_ROOT)
+                with open(os.path.join(dirpath, f)) as fh:
+                    yield rel.replace(os.sep, "."), fh.read()
+
+
+def test_module_info_segments_match_ast(monkeypatch):
+    """Every symbol segment the content hash folds in is byte-identical to
+    ``ast.get_source_segment`` for the same node — the slicing over
+    once-split lines must not change a single query hash. ``ast``'s own
+    line splitter is memoized per text (it is a pure function of it), so
+    the reference stays ``ast``'s rule without re-splitting per node."""
+    monkeypatch.setattr(registry, "_module_info_cache", {})
+    ast_split, memo = ast._splitlines_no_ff, {}
+
+    def memo_split(source):
+        if source not in memo:
+            memo[source] = ast_split(source)
+        return list(memo[source])
+
+    monkeypatch.setattr(ast, "_splitlines_no_ff", memo_split)
+    checked = 0
+    for module, text in _engine_modules():
+        expected = {}
+        for node in ast.parse(text).body:
+            seg = ast.get_source_segment(text, node) or ""
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                expected[node.name] = seg
+            elif isinstance(node, ast.Assign):
+                for t in node.targets:
+                    if isinstance(t, ast.Name):
+                        expected[t.id] = seg
+        assert registry._module_info(module)["defs"] == expected, module
+        checked += len(expected)
+    assert checked > 1000
+
+
+def test_source_segment_matches_ast_on_edge_text():
+    """The line and column rule on text the engine modules may not yet
+    contain: non-ASCII before a node's start or end on its line (offsets
+    are UTF-8 bytes), form feeds (not line ends for ``ast``), ``\r\n`` and
+    lone ``\r`` endings, and a last line without a newline."""
+    text = (
+        'a = "é"; b = "ü"\r\n'
+        "\x0cdef f(x):\r\n    return x  # ß\r\n"
+        'class C:\n    s = "\x0c"\n\n'
+        'd = (1,\n     "é"); e = 2\r'
+        'g = "é"; h = (1,\n     2)\n'
+        "c = (1,\n     2)"
+    )
+    lines = registry._split_source_lines(text)
+    assert lines == ast._splitlines_no_ff(text)
+    for node in ast.parse(text).body:
+        assert registry._source_segment(lines, node) == ast.get_source_segment(text, node)
+
+
+def test_module_info_splits_each_module_once(monkeypatch):
+    """Complexity guard: ``_module_info`` splits a module's text into lines
+    once, however many top-level definitions it slices from it (splitting
+    per definition made hashing quadratic in module size)."""
+    monkeypatch.setattr(registry, "_module_info_cache", {})
+    calls = []
+    split = registry._split_source_lines
+
+    def counting_split(text):
+        calls.append(text)
+        return split(text)
+
+    monkeypatch.setattr(registry, "_split_source_lines", counting_split)
+    monkeypatch.setattr(
+        ast, "get_source_segment", lambda *a, **k: pytest.fail("re-split per node")
+    )
+    for module, text in _engine_modules():
+        before = len(calls)
+        registry._module_info(module)
+        assert calls[before:] == [text], module

@@ -51,21 +51,26 @@ def test_decimal_gate_allows_scaled_decimal_precedent(spark):
 
 def test_no_registered_query_outputs_scale0_decimal(spark, sf_dir):
     """Plan-level sweep: no registered query may output a scale-0 decimal
-    column (driver-hash-unsafe). Schemas only — nothing executes."""
+    column (driver-hash-unsafe). Only output schemas are checked; no final
+    action runs, but building a query still runs the Spark jobs of its
+    eager ``localCheckpoint`` cuts. A query whose build raises fails the
+    sweep too, since its schema goes unchecked."""
     sys.path.insert(0, REPO)
     import __spark_entry__ as e
     from pyspark.sql.types import DecimalType
 
     bad = []
+    build_errors = {}
     for name, fn in e.queries().items():
         try:
             sdf = fn(spark, sf_dir)
-        except Exception:
-            continue  # build errors are other tests' business
+        except Exception as exc:
+            build_errors[name] = f"{type(exc).__name__}: {exc}"
+            continue
         for f in sdf.schema.fields:
             if isinstance(f.dataType, DecimalType) and f.dataType.scale == 0:
                 bad.append(f"{name}.{f.name}:{f.dataType.simpleString()}")
-    assert not bad, bad
+    assert not bad and not build_errors, {"bad": bad, "build_errors": build_errors}
 
 
 def test_recover_upsert_swap_promotes_legacy_staging(spark, tmp_path):

@@ -2,11 +2,12 @@
 (VERDICT r11 item 1).
 
 ``QUERY_HASHES.json`` maps each query name to the content hash
-(``registry.query_hash``: function source + oracle SQL + referenced engine
-module files) it had WHEN ITS DRIVER EVIDENCE WAS PRODUCED. ``load_all()``
-compares current hashes against this file; a mismatch means the green
-evidence describes code that no longer exists, and the name outranks every
-unchanged green in the next driver window.
+(``registry.query_hash``: function source + oracle SQL + the transitive
+source closure of every engine symbol the query references) it had WHEN
+ITS DRIVER EVIDENCE WAS PRODUCED. ``load_all()`` compares current hashes
+against this file; a mismatch means the green evidence describes code that
+no longer exists, and the name outranks every unchanged green in the next
+driver window.
 
 Run modes:
 
